@@ -28,7 +28,10 @@ object Sinks {
 
   /** A write target for point batches. */
   trait RecordSink {
-    /** Write one (micro-)batch; returns (accepted, rejected) row counts. */
+    /** Write one (micro-)batch; returns (accepted, rejected) row counts.
+      * A sink may read `batch` up to three times (one count, two writes),
+      * so callers pass a cached frame, as
+      * [[graft.streaming.Pipeline.LateRouter]] does. */
     def write(batch: DataFrame, batchId: Long): (Long, Long)
   }
 
@@ -53,12 +56,13 @@ object Sinks {
       )
     )
 
-  /** Validation split + write shared by the record sinks: one cached
-    * flagged frame feeds both counts and both writes. `extraValid`
-    * lets a sink add endpoint-specific rejection rules (e.g. JDBC
-    * column-width limits); `writeEmptyOk` forces the accepted-side write
-    * even for an empty batch (the JDBC sink creates its table through
-    * it). */
+  /** Validation split + write shared by the record sinks: one aggregate
+    * counts both sides, then each non-empty side is written. It caches
+    * nothing of its own: the count and both writes read the caller's
+    * cached batch (see [[RecordSink.write]]). `extraValid` lets a sink
+    * add endpoint-specific rejection rules (e.g. JDBC column-width
+    * limits); `writeEmptyOk` forces the accepted-side write even for an
+    * empty batch (the JDBC sink creates its table through it). */
   private def splitAndWrite(
       batch: DataFrame,
       writeOk: DataFrame => Unit,
@@ -68,15 +72,11 @@ object Sinks {
   ): (Long, Long) = {
     val flagged = isValidPoint(batch)
       .withColumn("_valid", col("_valid") && coalesce(extraValid(batch), lit(false)))
-      .cache()
-    try {
-      val ok = flagged.filter(col("_valid")).drop("_valid")
-      val bad = flagged.filter(!col("_valid")).drop("_valid")
-      val (nOk, nBad) = (ok.count(), bad.count())
-      if (nOk > 0 || writeEmptyOk) writeOk(ok)
-      if (nBad > 0) writeBad(bad)
-      (nOk, nBad)
-    } finally flagged.unpersist()
+    val counts = flagged.agg(count_if(col("_valid")), count_if(!col("_valid"))).head()
+    val (nOk, nBad) = (counts.getLong(0), counts.getLong(1))
+    if (nOk > 0 || writeEmptyOk) writeOk(flagged.filter(col("_valid")).drop("_valid"))
+    if (nBad > 0) writeBad(flagged.filter(!col("_valid")).drop("_valid"))
+    (nOk, nBad)
   }
 
   /** Offline-runnable table sink: appends accepted rows as parquet under
@@ -236,18 +236,15 @@ object Sinks {
     }
   }
 
-  /** Console sink (O9 — the reference's side-output `print()`). The
-    * batch is cached across the two actions (show + count) so its lineage
-    * — the whole source scan on the late-data path — runs once per
-    * trigger, not twice. */
+  /** Console sink (O9 — the reference's side-output `print()`). Its two
+    * actions (count + show) both read the caller's cached batch, so the
+    * lineage — the whole source scan on the late-data path — runs once
+    * per trigger, not twice. */
   final class ConsoleSink extends RecordSink {
     override def write(batch: DataFrame, batchId: Long): (Long, Long) = {
-      val cached = batch.cache()
-      try {
-        val n = cached.count()
-        cached.show(20, truncate = false)
-        (n, 0L)
-      } finally cached.unpersist()
+      val n = batch.count()
+      batch.show(20, truncate = false)
+      (n, 0L)
     }
   }
 
@@ -256,9 +253,8 @@ object Sinks {
     * DIFFERENT QUERY and only the other side should land here: e.g.
     * `Main --mode refire` runs the update-mode upsert as the main
     * delivery and a LateRouter purely for the dead letter, so the
-    * router's on-time side discards. The count() still materializes the
-    * batch, keeping LateRouter's watermark bookkeeping (which reads the
-    * cached frame after both writes) exactly as with a real sink. */
+    * router's on-time side discards. Its count() reads the router's
+    * already-built cache, so discarding costs no source scan. */
   final class DiscardSink extends RecordSink {
     override def write(batch: DataFrame, batchId: Long): (Long, Long) =
       (batch.count(), 0L)

@@ -5,10 +5,12 @@ import graft.functions.LogParse
 import graft.sink.Sinks.RecordSink
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 /** The reference pipeline, Structured-Streaming-native (operators
   * O1–O11 end to end):
@@ -227,6 +229,20 @@ object Pipeline {
     * a record 600 s behind the established watermark goes to the late
     * sink.
     *
+    * One materialization per micro-batch: the router flags `_late`,
+    * caches, and builds the cache with the one action that also reads the
+    * batch's max `time`; both routes and every count inside the sinks read
+    * that cache, so the source lineage runs once. The two routes then
+    * write CONCURRENTLY, like the reference's independent main-sink and
+    * side-output operators (StreamingJob.java:150-168,180-181): the late
+    * side on a helper thread, the on-time side on the caller's.
+    *
+    * Delivery is at-least-once with no order between the routes: both
+    * writes are waited for, even when one fails, and the first failure is
+    * rethrown before the watermark advances — so a replay of the batch is
+    * judged exactly as its first attempt was, and the route that did land
+    * is written again.
+    *
     * Restart semantics: the in-memory watermark starts at
     * `initialWatermarkMs` (use [[LateRouter.bootstrapWatermark]] to
     * recover it from the main sink's own data) — without it, the first
@@ -253,22 +269,52 @@ object Pipeline {
         col("time").isNotNull && col("time") < lit(cutoff)
       ).cache()
       try {
-        late.write(flagged.filter(col("_late")).drop("_late"), batchId)
-        onTime.write(flagged.filter(!col("_late")).drop("_late"), batchId)
-        // advance the watermark for subsequent batches — computed from the
-        // CACHED frame (already materialized by the two writes above) so
-        // the source lineage runs exactly once per micro-batch; reading it
-        // from `batch` here would trigger a third source scan
+        // this action builds the cache BEFORE the two concurrent writes
+        // read it: first readers of an unbuilt cache that run in parallel
+        // would each compute the source lineage
         val batchMax = flagged.agg(max(col("time"))).collect()(0)
+        writeRoutes(flagged, batchId)
+        // advance the watermark for subsequent batches only once both
+        // routes landed
         if (!batchMax.isNullAt(0)) {
           val m = batchMax.getLong(0)
           maxSeenMs.updateAndGet(prev => math.max(prev, m))
         }
       } finally flagged.unpersist()
     }
+
+    /** The late route on a helper thread that carries this thread's
+      * session and local properties — job group and streaming query and
+      * batch ids, so `StreamingQuery.stop()` cancels its jobs too — and
+      * the on-time route here. Waits for both; rethrows the first failure
+      * with any second one suppressed. */
+    private def writeRoutes(flagged: DataFrame, batchId: Long): Unit = {
+      val failure = new AtomicReference[Throwable]()
+      def route(sink: RecordSink, rows: DataFrame): Unit =
+        try sink.write(rows.drop("_late"), batchId)
+        catch {
+          case t: Throwable =>
+            if (!failure.compareAndSet(null, t) && (failure.get ne t))
+              failure.get.addSuppressed(t)
+        }
+      val lateDone = SQLExecution.withThreadLocalCaptured(
+        ClassicConversions.castToImpl(flagged.sparkSession), LateRouter.writers)(
+        route(late, flagged.filter(col("_late"))))
+      route(onTime, flagged.filter(!col("_late")))
+      lateDone.join()
+      Option(failure.get).foreach(throw _)
+    }
   }
 
   object LateRouter {
+    /** Threads for the late routes: daemon, so they never hold up JVM
+      * exit, and an idle one ends after a minute. */
+    private val writers = java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "late-router-write")
+      t.setDaemon(true)
+      t
+    }
+
     /** Recover the event-time watermark from an existing parquet sink
       * (max `time` already delivered) so a restarted router resumes late
       * detection immediately instead of lapsing for one batch.
