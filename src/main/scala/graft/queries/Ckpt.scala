@@ -5,15 +5,15 @@ import org.apache.spark.sql.DataFrame
 /** Central seam for the straight-line materializations inside query
   * builders (the round-17 re-derivation fixes).
   *
-  * `df.ckpt()` is an EAGER local checkpoint, the round-17 form. The
-  * lazy variant (`localCheckpoint(false)` — the query's own first
-  * action materializes, one less job) was A/B'd full-width in round 18
-  * and kept ONLY for the sequential-consumer loops: with PARALLEL first
-  * consumers (both sides of a self-join, a fold and a join side
-  * scheduled together) the not-yet-cached marked RDD is computed by
-  * BOTH stages (block-cache race), duplicating the shared chain —
-  * measured minhash_estimate 1.24×, ngram_novelty 1.18× under lazy,
-  * net flat elsewhere. Eager guarantees materialize-once.
+  * `df.ckpt()` is an EAGER local checkpoint, the round-17 form, at
+  * every site. The lazy variant (`localCheckpoint(false)` — the query's
+  * own first action materializes, one less job) was A/B'd full-width in
+  * round 18 and lost; it is kept ONLY in the sequential-consumer loops:
+  * with PARALLEL first consumers (both sides of a self-join, a fold and
+  * a join side scheduled together) the not-yet-cached marked RDD is
+  * computed by BOTH stages (block-cache race), duplicating the shared
+  * chain — measured minhash_estimate 1.24×, ngram_novelty 1.18× under
+  * lazy, net flat elsewhere. Eager guarantees materialize-once.
   *
   * Why not `persist`: a persisted plan registers in the session
   * CacheManager keyed by its canonicalized plan, so a LATER construction
@@ -44,15 +44,10 @@ private[graft] object Ckpt {
   // mid-run flip would make bench timings unintelligible
   val disabled: Boolean = sys.env.get("SPARK_GRAFT_NO_CKPT").contains("1")
 
-  /** Escape hatch: SPARK_GRAFT_CKPT_MODE=lazy switches every site to
-    * the lazy form (one less job, but subject to the parallel-consumer
-    * compute race above) for A/B or debugging. Default is eager. */
-  val mode: String = sys.env.getOrElse("SPARK_GRAFT_CKPT_MODE", "eager")
-
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
     def ckpt(): DataFrame =
       if (disabled) df
-      else df.localCheckpoint(mode != "lazy")
+      else df.localCheckpoint(true)
 
     /** Marker for the CORPUS-PROPORTIONAL frames (SCALING.md size
       * budget): same checkpoint in-process, but the site is

@@ -3,9 +3,11 @@ package graft.queries
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.CheckpointBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.queries.Ckpt._
 
 /** Data-curation operators a training-data pipeline runs after the
@@ -15,11 +17,15 @@ import graft.queries.Ckpt._
   * and int8 embedding quantization.
   *
   * Scale notes (100 TB): everything here is scans + narrow maps + compact
-  * key shuffles, except [[dedupClusters]], which is the standard iterative
-  * min-label propagation (Pregel-style): one equijoin shuffle per round,
-  * rounds ≤ component diameter (LSH near-dup components are shallow —
-  * a handful of rounds in practice). Nothing collects rows to the driver;
-  * the driver loop only counts convergence.
+  * key shuffles, except the connected components behind [[dedupClusters]]
+  * ([[minLabelSliver]]), which pick their strategy from the exact
+  * edge-row count: while the edge list fits under [[SliverBroadcastCap]]
+  * it is fetched to the driver as primitive longs and solved there by
+  * union-find (0 propagation rounds); above the cap the standard
+  * iterative min-label propagation (Pregel-style) runs distributed — one
+  * equijoin shuffle per round, rounds at most ~ component diameter,
+  * shortened by a pointer jump. No other operator here collects rows to
+  * the driver.
   */
 object CurationQueries {
 
@@ -30,9 +36,12 @@ object CurationQueries {
     * result assigns every document (singletons included) the minimal
     * doc_id of its component — the "keeper" a dedup pass would retain.
     *
-    * Each round is one distributed equijoin + keyed min — the shape that
-    * scales to 10⁹ edges (GraphX/Pregel does exactly this; large-star /
-    * small-star halves the rounds if diameter ever matters). */
+    * Under [[SliverBroadcastCap]] edge rows the components are solved
+    * on the driver by union-find (0 rounds, same labels); above it each
+    * round is one distributed equijoin + keyed min — the shape that
+    * scales to 10⁹ edges (GraphX/Pregel does exactly this), rounds
+    * tracking component diameter, shortened by a pointer jump. See
+    * [[minLabelSliver]]. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     dedupClustersWithRounds(spark, dir)._1
 
@@ -53,7 +62,9 @@ object CurationQueries {
     * observable a skew stress test bounds: rounds track component
     * DIAMETER, not size, so a pathological mega-cluster (the shape a
     * collapsed LSH threshold produces) must still converge in a handful
-    * of rounds, nowhere near the `maxRounds` backstop. */
+    * of rounds, nowhere near the `maxRounds` backstop. The count is 0
+    * when the edge list fits under [[SliverBroadcastCap]] and the
+    * components are solved on the driver. */
   private[graft] def dedupClustersWithRounds(
       spark: SparkSession, dir: String): (DataFrame, Int) = {
     val edges = SimilarityQueries.minhashLsh(spark, dir)
@@ -63,33 +74,48 @@ object CurationQueries {
     (labels.withColumnRenamed("node_id", "doc_id"), rounds)
   }
 
-  /** Connected components by iterative min-label propagation over an
-    * arbitrary undirected edge list `(a, b)` — the shared core behind
-    * [[dedupClusters]] (MinHash near-dup graph) and [[semanticClusters]]
-    * (embedding near-dup graph). Every node in `nodes(node_id)` comes
-    * back labeled with its component's minimal node id (edge-free
-    * singletons label themselves); the Int is the round count, which
-    * tracks component DIAMETER, not size. */
+  /** Connected components over an arbitrary undirected edge list
+    * `(a, b)` — the shared core behind [[dedupClusters]] (MinHash
+    * near-dup graph) and [[semanticClusters]] (embedding near-dup
+    * graph). Every node in `nodes(node_id)` comes back labeled with its
+    * component's minimal node id (edge-free singletons label
+    * themselves). The Int is the propagation round count: 0 when the
+    * edge list fits under [[SliverBroadcastCap]] (driver union-find),
+    * otherwise it tracks component DIAMETER (shortened by the pointer
+    * jump), never size. */
   private[graft] def minLabelComponents(
       edges: DataFrame, nodes: DataFrame): (DataFrame, Int) = {
     val (labels, nLabels, rounds) = minLabelSliver(edges)
     (labelNodes(labels, nLabels, nodes), rounds)
   }
 
-  /** Broadcast gate for the label sliver: 10M rows × ~16 B/row ≈ 160 MB —
-    * inside the guide's "a few hundred MB is usually fine", far under the
-    * 8 GB cap. Under it, consumers may broadcast the sliver (and split
-    * cluster-keyed work into sliver + singletons); over it, the planner's
-    * shuffle shapes stand — a mega-sliver must never be forced into
-    * driver/executor memory. */
-  private[graft] val SliverBroadcastCap = 10000000L
+  /** Size gate for the label sliver and the edge list behind it: 10M
+    * rows × ~16 B/row ≈ 160 MB — inside the guide's "a few hundred MB is
+    * usually fine", far under the 8 GB cap. Under it, [[minLabelSliver]]
+    * solves the components on the driver from the fetched edge list, and
+    * consumers may broadcast the sliver (and split cluster-keyed work
+    * into sliver + singletons); over it, the distributed loop and the
+    * planner's shuffle shapes stand — a mega-sliver must never be forced
+    * into driver/executor memory. */
+  private[graft] def SliverBroadcastCap: Long = sliverCap.value
+
+  private val sliverCap = new scala.util.DynamicVariable[Long](10000000L)
+
+  /** Test seam: run `body` with [[SliverBroadcastCap]] at `cap` on this
+    * thread (and threads it starts). Every size gate here reads the cap —
+    * the driver union-find gate in [[minLabelSliver]], [[labelNodes]] and
+    * the sliver consumers — so `withSliverCap(0)` drives the over-cap
+    * (100 TB) paths on fixtures whose graphs are tiny. The gates are
+    * evaluated while a query is BUILT: construct the frame inside. */
+  private[graft] def withSliverCap[T](cap: Long)(body: => T): T =
+    sliverCap.withValue(cap)(body)
 
   /** Rejoin the propagated label sliver onto the full node list:
     * edge-free singletons label themselves. The sliver is a LogicalRDD
     * after the loop — no stats — so the planner would default this
     * full-node join to sort-merge, shuffling and sorting the whole
     * corpus-side node list to meet a frame that is usually a sliver;
-    * gate an explicit broadcast on the exact count measured by the loop. */
+    * gate an explicit broadcast on the exact count [[minLabelSliver]] took. */
   private def labelNodes(
       sliver: DataFrame, nLabels: Long, nodes: DataFrame): DataFrame = {
     val labelSide = sliver.withColumnRenamed("cluster", "prop_cluster")
@@ -100,11 +126,27 @@ object CurationQueries {
       .select(col("node_id"), coalesce(col("prop_cluster"), col("node_id")).as("cluster"))
   }
 
-  /** The propagation loop restricted to EDGE-TOUCHED nodes — the shared
-    * core [[minLabelComponents]] wraps. Returns the converged sliver
-    * `(node_id, cluster)` (one row per edge endpoint, localCheckpoint-
-    * backed), its invariant row count (measured by the seed job — rows
-    * never appear or vanish across rounds), and the round count.
+  /** Connected components restricted to EDGE-TOUCHED nodes — the shared
+    * core [[minLabelComponents]] wraps. Returns the sliver
+    * `(node_id, cluster)` (one row per distinct edge endpoint, labeled
+    * with its component's minimal id), its row count, and the
+    * propagation round count.
+    *
+    * Strategy (the hybrid of Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC 2014 — finish in memory once the graph
+    * fits on one machine), picked from the exact edge-row count the
+    * materializing action of the edge checkpoint returns:
+    *  - at most [[SliverBroadcastCap]] rows: one more job fetches the edge
+    *    list to the driver as primitive longs (16 B per row), union-find
+    *    solves it there ([[unionFindMin]]), and the sliver comes back as
+    *    an RDD-backed frame with the loop's schema — 0 rounds, labels
+    *    bit-identical to the loop's fixpoint;
+    *  - above it: the distributed min-label propagation loop below,
+    *    rounds track component diameter (the pointer jump shortens it:
+    *    ~log on chains whose ids follow the chain, 21 rounds on a 64-node
+    *    chain with shuffled ids) — the only path for graphs too big for
+    *    driver memory.
+    *
     * Consumers whose output does not need the full label frame
     * (histograms, per-cluster elections, leak censuses) work directly on
     * the sliver and derive the edge-free singletons arithmetically —
@@ -117,14 +159,25 @@ object CurationQueries {
     // logical plan per round — the cached data is reused but the
     // analyzer/optimizer walk the whole 2^rounds tree, which took the
     // driver heap down on the semantic graph (deep kmeans lineage under
-    // every leaf) before any executor did real work. The eager
-    // checkpoint truncates lineage, so every round's plan is
-    // constant-sized: checkpointed-adj ⋈ checkpointed-labels. The
-    // edge-frame checkpoint also cuts the (possibly expensive) edge
-    // lineage once instead of re-optimizing it into every round.
+    // every leaf) before any executor did real work. The checkpoint
+    // truncates lineage, so every round's plan is constant-sized:
+    // checkpointed-adj ⋈ checkpointed-labels. The edge-frame checkpoint
+    // also cuts the (possibly expensive) edge lineage once instead of
+    // re-optimizing it into every round.
+    // LAZY, materialized by the RDD-level count below — the very action
+    // the eager form runs internally (one job), now keeping the number.
+    // A Dataset count() would plan an aggregate exchange on top: one
+    // more job under AQE.
     val adj = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
+    val nAdj = adj.queryExecution.toRdd.count()
+    if (nAdj <= SliverBroadcastCap) {
+      driverSliver(adj, nAdj) match {
+        case Some(solved) => return solved
+        case None => // non-Long ids or a null endpoint: the loop labels them
+      }
+    }
     // Iterate ONLY over nodes that touch an edge: a node with no
     // candidate can never change labels, and on a real corpus the
     // near-dup subgraph is a sliver of the whole (the full label table
@@ -175,16 +228,25 @@ object CurationQueries {
       // saved rounds on these shallow fixtures) — the point is the
       // round complexity at scale, where a long-chain mega-component
       // would cost its diameter in whole-graph join rounds and now
-      // costs its log.
+      // costs its log (when ids follow the chain: a 64-node chain on
+      // shuffled ids still takes 21 rounds).
       val ptr = stepped.select(col("node_id").as("p_id"), col("c1").as("p_c"))
       val c2 = least(col("c1"), coalesce(col("p_c"), col("c1")))
-      val next = stepped.join(ptr, col("c1") === col("p_id"), "left")
-        .select(
-          col("node_id"),
-          c2.as("cluster"),
-          (c2 < col("c0")).as("chg")
-        )
-        .localCheckpoint(false)
+      // The checkpoint leaf would carry this round's estimated size,
+      // itself the product of the previous round's estimates over the
+      // joins: the estimate's digit count doubled every round (~16k
+      // digits at 11 rounds) until planning a shuffled 64-node chain
+      // (21 rounds) ran the driver out of heap in BigInt products.
+      // Dropping it leaves every round's plan, and its planning cost,
+      // constant-sized.
+      val next = CheckpointBridge.withoutOriginStats(
+        stepped.join(ptr, col("c1") === col("p_id"), "left")
+          .select(
+            col("node_id"),
+            c2.as("cluster"),
+            (c2 < col("c0")).as("chg")
+          )
+          .localCheckpoint(false))
       changed = next.filter(col("chg")).count()
       labels = next.select(col("node_id"), col("cluster"))
       rounds += 1
@@ -195,6 +257,73 @@ object CurationQueries {
     // superseded rounds' checkpoint blocks are ContextCleaner-managed:
     // they free as their frames go unreferenced, nothing leaks per call
     (labels, nLabels, rounds)
+  }
+
+  /** Rows per slice of the driver-built sliver: 16 B/row keeps every
+    * task under Spark's 1 MB large-task warning. */
+  private val SliverSliceRows = 32768
+
+  /** [[minLabelSliver]]'s under-cap path over the materialized `adj`
+    * (`nAdj` rows): one job fetches the edge list — each undirected edge
+    * once (`src <= dst`), as primitive longs — and union-find labels
+    * every endpoint on the driver. None when the ids are not Long or an
+    * endpoint is null (a null never joins in the loop, so it keeps a
+    * null label there; the edge producers emit `a < b` pairs, which
+    * exclude nulls). */
+  private def driverSliver(adj: DataFrame, nAdj: Long): Option[(DataFrame, Long, Int)] = {
+    val idField = adj.schema("src")
+    if (idField.dataType != LongType) return None
+    val parts =
+      if (nAdj == 0) Array.empty[Option[Array[Long]]]
+      else adj.queryExecution.toRdd.mapPartitions { it =>
+        val buf = Array.newBuilder[Long]
+        var clean = true
+        it.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) clean = false
+          else if (r.getLong(0) <= r.getLong(1)) { buf += r.getLong(0); buf += r.getLong(1) }
+        }
+        Iterator(Option.when(clean)(buf.result()))
+      }.collect()
+    if (!parts.forall(_.isDefined)) return None
+    val (ids, labels) = unionFindMin(Array.concat(parts.flatten.toSeq: _*))
+    val chunks = (0 until ids.length by SliverSliceRows).map(from =>
+      (ids.slice(from, from + SliverSliceRows), labels.slice(from, from + SliverSliceRows)))
+    val rows = adj.sparkSession.sparkContext
+      .parallelize(chunks, math.max(1, chunks.size))
+      .flatMap { case (is, ls) => is.indices.iterator.map(i => Row(is(i), ls(i))) }
+    val schema = StructType(Seq(idField.copy(name = "node_id"), idField.copy(name = "cluster")))
+    Some((adj.sparkSession.createDataFrame(rows, schema), ids.length.toLong, 0))
+  }
+
+  /** Connected components of the edge list `pairs` = (a0, b0, a1, b1, …):
+    * the sorted distinct endpoints and, for each, its component's minimal
+    * id. Union-find over the endpoints' sorted positions, always rooting
+    * at the smaller position (so every root is its component's minimum)
+    * with path halving — the exact fixpoint of the min-label loop. */
+  private def unionFindMin(pairs: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = pairs.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    i = 0
+    while (i < pairs.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, pairs(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, pairs(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    (ids, Array.tabulate(n)(j => ids(find(j))))
   }
 
   /** SemDeDup's clustering step: connected components over the
@@ -1462,7 +1591,7 @@ object CurationQueries {
     * Scale (100 TB): the flag windows key on fp / cluster / shard —
     * never an unpartitioned sort; rates are a broadcast; cluster labels
     * come checkpointed from [[dedupClusters]]. */
-  private def curationFlags(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def curationFlags(spark: SparkSession, dir: String): DataFrame = {
     // ONE regex tokenize for the WHOLE cascade: the flag scan projection
     // keeps the token array and persists (corpus-sized frame — the
     // ckptBig class), and the MinHash near-dup chain folds from the SAME

@@ -73,7 +73,11 @@ class CurationSpec extends SparkSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_skew").toString
     (mega ++ singles).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val (labels, rounds) = CurationQueries.dedupClustersWithRounds(spark, tmp)
+    // cap 0: the clique goes through the distributed loop, whose round
+    // bound this pins (under the cap it is solved on the driver, 0 rounds)
+    val (labels, rounds) = CurationQueries.withSliverCap(0L) {
+      CurationQueries.dedupClustersWithRounds(spark, tmp)
+    }
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 300)
     // the whole mega-cluster collapses onto doc 0
@@ -94,6 +98,8 @@ class CurationSpec extends SparkSuite {
     // and auto-broadcast are disabled inside the pin because each splits
     // one query into extra jobs (one per shuffle stage / one per
     // broadcast build), which would make the count nondeterministic here.
+    // Cap 0 keeps this graph on the distributed loop (under the cap it
+    // is solved on the driver — pinned separately below).
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     val nodes = (0L to 12L).toDF("node_id")
     val sc = spark.sparkContext
@@ -103,7 +109,9 @@ class CurationSpec extends SparkSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       sc.setJobGroup("lp_job_pin", "LP loop job-count pin", interruptOnCancel = false)
-      val (labels, rounds) = CurationQueries.minLabelComponents(edges, nodes)
+      val (labels, rounds) = CurationQueries.withSliverCap(0L) {
+        CurationQueries.minLabelComponents(edges, nodes)
+      }
       sc.clearJobGroup()
       val expected = 2 + rounds
       // the status tracker is fed asynchronously off the listener bus
@@ -122,6 +130,118 @@ class CurationSpec extends SparkSuite {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abj)
     }
+  }
+
+  test("LP driver path: under the cap, union-find on the driver in at most 2 jobs and 0 rounds") {
+    // the edge-row count that materializes the edge checkpoint is under
+    // the cap, so one more job fetches the edge list and the components
+    // are solved on the driver: no seed-label job, no propagation round.
+    // AQE and auto-broadcast off as in the loop pin above.
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L), (3L, 2L), (7L, 7L))
+    val edges = pairs.toDF("a", "b")
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val abj = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      sc.setJobGroup("lp_driver_pin", "LP driver-path job-count pin", interruptOnCancel = false)
+      val (sliver, nLab, rounds) = CurationQueries.minLabelSliver(edges)
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      val jobs = sc.statusTracker.getJobIdsForGroup("lp_driver_pin").length
+      assert(jobs <= 2, s"driver path ran $jobs jobs inside minLabelSliver")
+      assert(rounds == 0)
+      val endpoints = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+      assert(nLab == endpoints.size.toLong)
+      val got = sliver.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == PipelineQueriesSpec.componentMinRef(endpoints, pairs))
+      // the sliver keeps the loop's schema (names, types, nullability)
+      val loopSchema = CurationQueries.withSliverCap(0L) {
+        CurationQueries.minLabelSliver(edges)._1.schema
+      }
+      assert(sliver.schema == loopSchema)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abj)
+    }
+  }
+
+  test("LP property: driver union-find, cap-0 loop and the reference agree on random graphs") {
+    // each graph: disjoint chains (up to 64 nodes), stars and cliques on
+    // shuffled ids (so a component's minimum sits anywhere in it), plus
+    // edges repeated and reversed, and self-loops — on component nodes
+    // and on otherwise isolated nodes. Ids are non-nullable or nullable
+    // Long in turn; both paths must keep the edge frame's schema.
+    def graph(rnd: scala.util.Random, withLongChain: Boolean): Seq[(Long, Long)] = {
+      val perm = rnd.shuffle((0L until 1000L).toVector)
+      var next = 0
+      def fresh(k: Int): Vector[Long] = { val s = perm.slice(next, next + k); next += k; s }
+      def chain(k: Int) = fresh(k).sliding(2).map(p => (p(0), p(1))).toSeq
+      def star(k: Int) = { val v = fresh(k); v.tail.map(l => if (rnd.nextBoolean()) (v.head, l) else (l, v.head)) }
+      def clique(k: Int) = { val v = fresh(k); v.combinations(2).map(p => (p(0), p(1))).toSeq }
+      val base = (if (withLongChain) chain(64) else chain(2 + rnd.nextInt(63))) ++
+        star(2 + rnd.nextInt(20)) ++ clique(2 + rnd.nextInt(7)) ++
+        Seq.fill(rnd.nextInt(3))(rnd.nextInt(3) match {
+          case 0 => chain(2 + rnd.nextInt(63))
+          case 1 => star(2 + rnd.nextInt(20))
+          case _ => clique(2 + rnd.nextInt(7))
+        }).flatten
+      val extras = base.filter(_ => rnd.nextInt(4) == 0).map(_.swap) ++
+        base.filter(_ => rnd.nextInt(5) == 0) ++
+        base.filter(_ => rnd.nextInt(6) == 0).map(e => (e._1, e._1)) ++
+        fresh(1 + rnd.nextInt(2)).map(v => (v, v))
+      rnd.shuffle(base ++ extras)
+    }
+    (0 until 6).foreach { i =>
+      val pairs = graph(new scala.util.Random(4100L + i), withLongChain = i == 0)
+      val raw = pairs.toDF("a", "b")
+      val edges =
+        if (i % 2 == 0) raw
+        else raw.select(when(col("a") >= 0, col("a")).as("a"), when(col("b") >= 0, col("b")).as("b"))
+      val endpoints = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+      val want = PipelineQueriesSpec.componentMinRef(endpoints, pairs)
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val (drv, nDrv, rDrv) = CurationQueries.minLabelSliver(edges)
+      val (lp, nLp, rLp) = CurationQueries.withSliverCap(0L)(CurationQueries.minLabelSliver(edges))
+      assert(rDrv == 0 && rLp > 0, s"graph $i: driver $rDrv rounds, loop $rLp")
+      assert(nDrv == endpoints.size.toLong && nLp == endpoints.size.toLong, s"graph $i")
+      assert(labels(drv) == want, s"graph $i: driver union-find diverged from the reference")
+      assert(labels(lp) == want, s"graph $i: cap-0 loop diverged from the reference")
+      assert(drv.schema == lp.schema, s"graph $i: ${drv.schema} vs ${lp.schema}")
+    }
+    // a null endpoint never joins in the loop and keeps a null label
+    // there; the driver path hands such a graph to the loop
+    val withNull = Seq((Some(1L), Some(2L)), (Some(2L), None), (Some(5L), Some(4L))).toDF("a", "b")
+    def rows(t: (org.apache.spark.sql.DataFrame, Long, Int)) =
+      (t._1.collect().map(_.toString).sorted.toSeq, t._2)
+    assert(rows(CurationQueries.minLabelSliver(withNull)) ==
+      rows(CurationQueries.withSliverCap(0L)(CurationQueries.minLabelSliver(withNull))))
+  }
+
+  test("sliver cap 0 == default cap: every LP-consumer query returns identical rows at sf0.01") {
+    // cap 0 drives the distributed loop AND every consumer's over-cap
+    // fallback (the 100 TB path: full-frame label join, no broadcast);
+    // the default cap drives the driver union-find and the sliver
+    // splits. Both must give identical rows under the same column names
+    // and types (nullability may differ: cluster_split's sliver census
+    // sums where the full-frame census counts).
+    val d01 = s"${new java.io.File(dir).getParent}/sf0.01"
+    val names = Seq("dedup_clusters", "dedup_stats", "dedup_keep_best", "cluster_split",
+      "semantic_clusters", "semantic_keep", "curation_manifest")
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      (df.schema.map(f => (f.name, f.dataType)), df.collect().map(_.toString).sorted.toSeq)
+    def run(cap: Option[Long]): Map[String, Any] = {
+      def built[T](f: => T): T = cap.fold(f)(CurationQueries.withSliverCap(_)(f))
+      // the full-frame flag cascade also keeps its pass-3 scratch column
+      // `best`, which no output of the run reads
+      names.map(n => n -> sortedRows(built(SparkEntry.queries(n)(spark, d01)))).toMap +
+        ("curateRun flags" ->
+          sortedRows(built(CurationQueries.curationFlags(spark, d01)).drop("best")))
+    }
+    val (dflt, over) = (run(None), run(Some(0L)))
+    (names :+ "curateRun flags").foreach(n => assert(dflt(n) == over(n), s"$n differs at cap 0"))
   }
 
   test("stratified sample is deterministic and near the 10% rate") {

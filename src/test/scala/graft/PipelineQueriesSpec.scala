@@ -1983,17 +1983,7 @@ class PipelineQueriesSpec extends SparkSuite {
     val edges = SimilarityQueries.semanticNearDup(spark, dir)
       .select("va", "vb").as[(Long, Long)].collect()
     val nodes = Tables.embeddings(spark, dir).select("vec_id").as[Long].collect()
-    // independent reference: plain union-find over the same edge set
-    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
-    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val want = nodes.map(n => n -> find(n)).toMap
-    // min-anchor labels: normalize the reference to min-id per component
-    val byRoot = want.groupBy(_._2).map { case (_, m) => (m.keys.min, m.keys.toSet) }
-    val wantMin = byRoot.flatMap { case (minId, members) => members.map(_ -> minId) }
+    val wantMin = PipelineQueriesSpec.componentMinRef(nodes.toSeq, edges.toSeq)
     val got = graft.queries.CurationQueries.semanticClusters(spark, dir)
       .as[(Long, Long)].collect().toMap
     assert(got == wantMin)
@@ -2450,5 +2440,24 @@ class PipelineQueriesSpec extends SparkSuite {
       assert(r.getAs[Double]("wape") == sad.toDouble / sa.toDouble)
     }
     assert(out.keySet == scored.map(_._1).toSet)
+  }
+}
+
+object PipelineQueriesSpec {
+  /** Independent connected-components reference: plain union-find over
+    * `edges` (no path compression, no ordering tricks), normalized to
+    * min-anchor labels — every node in `nodes` maps to the minimal id of
+    * its component. */
+  def componentMinRef(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = nodes.map(n => n -> find(n)).toMap
+    // min-anchor labels: normalize the reference to min-id per component
+    val byRoot = want.groupBy(_._2).map { case (_, m) => (m.keys.min, m.keys.toSet) }
+    byRoot.flatMap { case (minId, members) => members.map(_ -> minId) }
   }
 }
